@@ -50,10 +50,18 @@ object Bench {
       finally src.close()
     } catch { case _: Exception => "" }
 
+  /** The `SPARK_GRAFT_CPUS` worker count (default 4), parsed once:
+    * `local[N]`, the load gate and the artifact's `cores` all use it.
+    * Anything but a positive integer fails naming the variable. */
+  def parseCpus(v: Option[String]): Int = v.fold(4) { s =>
+    s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val loadAtStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     // SPARK_GRAFT_ONLY: comma-separated query-name prefixes — targeted
     // scale probes (e.g. "d,c5,s" benches just the dedup/editdist/
     // similarity families at sf10 without paying the full suite).
@@ -68,7 +76,7 @@ object Bench {
     // join's 32-partition shuffle put ~0.5 GB single allocations in 32
     // concurrent tasks and OOM'd a 32 GB heap. On a real cluster this is
     // the spark.sql.shuffle.partitions sizing every deployment tunes.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufParts)
@@ -225,10 +233,9 @@ object Bench {
     // r15 artifact reported availableProcessors() here, so the driver's
     // SPARK_GRAFT_CPUS=8 scaling run self-labeled "cores":32 (VERDICT
     // r15 item 2); the host width stays visible as host_cores.
-    val cores = cpus
     val hostCores = Runtime.getRuntime.availableProcessors()
     def q(s: String) = "\"" + s + "\""
-    val env = s""""cores":$cores,"host_cores":$hostCores,"load_start":${q(loadAtStart)},""" +
+    val env = s""""cores":$cpus,"host_cores":$hostCores,"load_start":${q(loadAtStart)},""" +
       s""""load_end":${q(loadavg())},"nfail":${failed.size},""" +
       s""""passes":${passes.size},"gate_wait_s":$gateWait,"high_load":$highLoad,""" +
       // per-PASS 1-min loadavg (start end) + which passes the guard

@@ -250,16 +250,18 @@ object ChunkCodec {
       .order(if (dtype.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
     (dtype.kind, dtype.size) match {
       case ('i', 1) => val a = new Array[Byte](n); buf.get(a); a
-      case ('i', 2) => val a = new Array[Short](n); var i = 0; while (i < n) { a(i) = buf.getShort(); i += 1 }; a
-      case ('i', 4) => val a = new Array[Int](n); var i = 0; while (i < n) { a(i) = buf.getInt(); i += 1 }; a
-      case ('i', 8) => val a = new Array[Long](n); var i = 0; while (i < n) { a(i) = buf.getLong(); i += 1 }; a
+      // same-width dtypes: bulk copies through typed views, which honour
+      // `buf`'s byte order and throw BufferUnderflowException on a
+      // short payload like the element-wise reads
+      case ('i', 2) => val a = new Array[Short](n); buf.asShortBuffer().get(a); a
+      case ('i', 4) => val a = new Array[Int](n); buf.asIntBuffer().get(a); a
+      case ('i', 8) | ('u', 8) => val a = new Array[Long](n); buf.asLongBuffer().get(a); a
+      case ('f', 4) => val a = new Array[Float](n); buf.asFloatBuffer().get(a); a
+      case ('f', 8) => val a = new Array[Double](n); buf.asDoubleBuffer().get(a); a
       case ('u', 1) => val a = new Array[Short](n); var i = 0; while (i < n) { a(i) = (buf.get() & 0xff).toShort; i += 1 }; a
       case ('u', 2) => val a = new Array[Int](n); var i = 0; while (i < n) { a(i) = buf.getShort() & 0xffff; i += 1 }; a
       case ('u', 4) => val a = new Array[Long](n); var i = 0; while (i < n) { a(i) = buf.getInt() & 0xffffffffL; i += 1 }; a
-      case ('u', 8) => val a = new Array[Long](n); var i = 0; while (i < n) { a(i) = buf.getLong(); i += 1 }; a
       case ('f', 2) => val a = new Array[Float](n); var i = 0; while (i < n) { a(i) = halfToFloat(buf.getShort()); i += 1 }; a
-      case ('f', 4) => val a = new Array[Float](n); var i = 0; while (i < n) { a(i) = buf.getFloat(); i += 1 }; a
-      case ('f', 8) => val a = new Array[Double](n); var i = 0; while (i < n) { a(i) = buf.getDouble(); i += 1 }; a
       case ('b', _) => val a = new Array[Boolean](n); var i = 0; while (i < n) { a(i) = buf.get() != 0; i += 1 }; a
       case ('M', _) =>
         // datetime64 → epoch micros (Spark's internal TimestampType).
@@ -310,9 +312,10 @@ object ChunkCodec {
 
   /** Comparison view of a typed array (filter matching + statistics). */
   /** Is `v` (an element from [[elementAt]]) the array's fill value?
-    * Used by the `fillValueAsNull` read option (reference roadmap
-    * "fill_value→null", README.md:289-337) to surface absent cells as
-    * SQL NULL instead of the sentinel. */
+    * The semantics of the `fillValueAsNull` read option (reference
+    * roadmap "fill_value→null", README.md:289-337), which surfaces
+    * absent cells as SQL NULL instead of the sentinel; the scan applies
+    * them per run without boxing (`ZarrColumnarReader.nullFillRun`). */
   def isFill(fv: Double, v: Any): Boolean = v match {
     // integral cells compare in the INTEGER domain: `l.toDouble == fv`
     // would collide distinct longs past 2^53 with the fill value and

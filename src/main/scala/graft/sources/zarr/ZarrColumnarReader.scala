@@ -3,33 +3,34 @@ package graft.sources.zarr
 import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-/** Columnar reader for a Zarr partition slice: fills
-  * `OnHeapColumnVector`s in 4K-row batches with an odometer walk over
-  * the filtered grid — no per-row division, no boxing, and the
-  * emitted `ColumnarBatch` feeds Spark's vectorized pipeline exactly
-  * like the parquet reader does (the Spark-native analog of the
-  * reference's single Arrow RecordBatch,
+/** The Zarr scan: fills `OnHeapColumnVector`s in 4K-row batches for
+  * one partition slice of the filtered grid, and feeds Spark's
+  * vectorized pipeline exactly like the parquet reader does (the
+  * Spark-native analog of the reference's single Arrow RecordBatch,
   * /root/reference/src/reader/zarr_reader.rs:417-432 — but batched and
-  * parallel).
+  * parallel). It is the only Zarr scan reader: the empty projection
+  * (bare counts) gets column-less batches that carry just `numRows`.
   *
-  * Per data variable the reader tracks the current chunk and the flat
-  * in-chunk offset incrementally: advancing the last dimension inside
-  * one chunk is `offset += 1`; crossing any boundary recomputes from
-  * the odometer (rare: once per chunk edge).
+  * Batches are filled in RUNS: stretches of rows where only the last
+  * dimension moves. A run ends at the end of the last-dimension range,
+  * at the batch end, or at any projected variable's chunk edge, so
+  * inside a run every variable's cells are contiguous in its decoded
+  * chunk and the run is one bulk copy (`putFloats(rowId, len, src,
+  * srcIndex)` and kin). The last-dimension coordinate is a bulk copy
+  * from the coordinate array; outer coordinates are constant over a
+  * run and written as repeated-value runs. Fill-as-null is a typed
+  * per-run scan with [[ChunkCodec.isFill]]'s semantics. The vectors
+  * and the batch are allocated once and `reset()` per batch.
   */
 class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     extends PartitionReader[ColumnarBatch] {
 
   private val store = ZarrStore.open(p.storePath)
   private val nDims = p.ranges.length
+  private val last = nDims - 1
   private val fields = p.projection.toArray
-  private val types: Array[DataType] = fields.map {
-    case CoordField(d) => p.coords(d).meta.dtype.sparkType
-    case VarField(m) => m.dtype.sparkType
-  }
 
   // odometer state: global indices per dimension for the current row
   private val idx = new Array[Int](nDims)
@@ -40,8 +41,7 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
   private final class VarState(val meta: ZarrArrayMeta) {
     val chunkIdx = new Array[Long](nDims)
     var chunk: AnyRef = _
-    var offset: Long = -1
-    var valid = false
+    var offset = 0
     var bytesRead = 0L
     var chunksDecoded = 0L
     /** Payload size of the in-flight prefetch (pool thread writes,
@@ -110,17 +110,18 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
       if (prefetchBytes != null) { bytesRead += prefetchBytes.get(); prefetchBytes = null }
     }
 
-    def locate(): Unit = {
-      var changed = !valid
+    /** Point `chunk`/`offset` at the cell under the odometer, fetching
+      * the chunk when the odometer crossed into a new one; returns the
+      * exclusive last-dimension index where that chunk ends. */
+    def locate(): Int = {
+      var changed = chunk == null
       var d = 0
       while (d < nDims) {
-        val c = idx(d) / meta.chunks(d)
-        if (!valid || c != chunkIdx(d)) { changed = true }
+        val c = (idx(d) / meta.chunks(d)).toLong
+        if (c != chunkIdx(d)) { chunkIdx(d) = c; changed = true }
         d += 1
       }
       if (changed) {
-        d = 0
-        while (d < nDims) { chunkIdx(d) = idx(d) / meta.chunks(d); d += 1 }
         val key = chunkIdx.toSeq
         val hit = band.get(key)
         if (hit != null) chunk = hit
@@ -146,68 +147,63 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
             }
           }
         }
-        valid = true
       }
-      var off = 0L
+      var off = 0
       d = 0
-      while (d < nDims) { off = off * meta.chunks(d) + (idx(d) % meta.chunks(d)); d += 1 }
+      while (d < nDims) { off = off * meta.chunks(d) + idx(d) % meta.chunks(d); d += 1 }
       offset = off
-    }
-
-    /** Fast path: the last dimension advanced by one and stayed inside
-      * the same chunk. */
-    def advanceWithinRow(): Boolean = {
-      val last = nDims - 1
-      if (idx(last) / meta.chunks(last) == chunkIdx(last)) { offset += 1; true }
-      else false
+      math.min((chunkIdx(last) + 1) * meta.chunks(last), Int.MaxValue.toLong).toInt
     }
   }
 
   private val varStates: Array[VarState] = fields.collect { case VarField(m) => new VarState(m) }
-  private var batch: ColumnarBatch = _
+  private val vectors: Array[OnHeapColumnVector] = {
+    val capacity = math.max(1L, math.min(batchSize.toLong, p.rowEnd - p.rowStart)).toInt
+    fields.map {
+      case CoordField(d) => new OnHeapColumnVector(capacity, p.coords(d).meta.dtype.sparkType)
+      case VarField(m) => new OnHeapColumnVector(capacity, m.dtype.sparkType)
+    }
+  }
+  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
 
   override def next(): Boolean = {
     if (row >= p.rowEnd) return false
     val n = math.min(batchSize.toLong, p.rowEnd - row).toInt
-    val vectors = types.map(t => new OnHeapColumnVector(n, t))
+    vectors.foreach(_.reset())
     var r = 0
     while (r < n) {
-      // locate all var fields for this row
+      val i0 = idx(last)
+      var len = math.min(n - r, p.ranges(last)._2 - i0)
       var vs = 0
+      while (vs < varStates.length) { len = math.min(len, varStates(vs).locate() - i0); vs += 1 }
+      vs = 0
       var f = 0
       while (f < fields.length) {
         fields(f) match {
-          case CoordField(d) => putValue(vectors(f), r, types(f), p.coords(d).raw, idx(d))
-          case VarField(_) =>
+          case CoordField(d) =>
+            if (d == last) copyRun(vectors(f), r, len, p.coords(d).raw, i0)
+            else repeatRun(vectors(f), r, len, p.coords(d).raw, idx(d))
+          case VarField(m) =>
             val st = varStates(vs)
-            if (st.offset < 0 || !st.valid) st.locate()
-            if (p.fillAsNull &&
-                ChunkCodec.isFill(st.meta.fillValue,
-                  ChunkCodec.elementAt(st.chunk, st.offset.toInt)))
-              vectors(f).putNull(r)
-            else putValue(vectors(f), r, types(f), st.chunk, st.offset.toInt)
+            copyRun(vectors(f), r, len, st.chunk, st.offset)
+            if (p.fillAsNull) nullFillRun(vectors(f), r, len, st.chunk, st.offset, m.fillValue)
             vs += 1
         }
         f += 1
       }
-      r += 1
-      row += 1
-      if (r < n) advanceOdometer()
+      r += len
+      advance(len)
     }
-    if (row < p.rowEnd) advanceOdometer()
-    batch = new ColumnarBatch(vectors.map(_.asInstanceOf[ColumnVector]), n)
+    row += n
+    batch.setNumRows(n)
     true
   }
 
-  /** Increment the odometer to the next row; maintain var-field chunk
-    * state incrementally. `lastOnly` = only the last dimension moved
-    * (the overwhelmingly common case), which enables the offset++
-    * fast path. */
-  private def advanceOdometer(): Unit = {
-    val last = nDims - 1
-    idx(last) += 1
-    val lastOnly = idx(last) < p.ranges(last)._2
-    if (!lastOnly) {
+  /** Move the odometer `len` rows on; a run never crosses the end of
+    * the last dimension, so at most one carry ripples outward. */
+  private def advance(len: Int): Unit = {
+    idx(last) += len
+    if (idx(last) >= p.ranges(last)._2) {
       idx(last) = p.ranges(last)._1
       var d = last - 1
       var carry = true
@@ -217,13 +213,72 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
         d -= 1
       }
     }
-    var vs = 0
-    while (vs < varStates.length) {
-      val st = varStates(vs)
-      if (!(lastOnly && st.valid && st.advanceWithinRow())) st.locate()
-      vs += 1
+  }
+
+  /** Rows `[r, r+len)` ← `src[from, from+len)`. */
+  private def copyRun(v: OnHeapColumnVector, r: Int, len: Int, src: AnyRef, from: Int): Unit =
+    src match {
+      case a: Array[Float] => v.putFloats(r, len, a, from)
+      case a: Array[Double] => v.putDoubles(r, len, a, from)
+      case a: Array[Long] => v.putLongs(r, len, a, from)
+      case a: Array[Int] => v.putInts(r, len, a, from)
+      case a: Array[Short] => v.putShorts(r, len, a, from)
+      case a: Array[Byte] => v.putBytes(r, len, a, from)
+      case a: Array[Boolean] => var k = 0; while (k < len) { v.putBoolean(r + k, a(from + k)); k += 1 }
+      case a: Array[String] => var k = 0; while (k < len) { v.putByteArray(r + k, utf8(a(from + k))); k += 1 }
+      case other => throw new IllegalStateException(s"Unsupported columnar array ${other.getClass}")
+    }
+
+  /** Rows `[r, r+len)` ← `src(i)` repeated. */
+  private def repeatRun(v: OnHeapColumnVector, r: Int, len: Int, src: AnyRef, i: Int): Unit =
+    src match {
+      case a: Array[Float] => v.putFloats(r, len, a(i))
+      case a: Array[Double] => v.putDoubles(r, len, a(i))
+      case a: Array[Long] => v.putLongs(r, len, a(i))
+      case a: Array[Int] => v.putInts(r, len, a(i))
+      case a: Array[Short] => v.putShorts(r, len, a(i))
+      case a: Array[Byte] => v.putBytes(r, len, a(i))
+      case a: Array[Boolean] => v.putBooleans(r, len, a(i))
+      case a: Array[String] =>
+        val b = utf8(a(i)); var k = 0; while (k < len) { v.putByteArray(r + k, b); k += 1 }
+      case other => throw new IllegalStateException(s"Unsupported columnar array ${other.getClass}")
+    }
+
+  /** Null out the run's fill-valued cells — [[ChunkCodec.isFill]]
+    * without boxing: integral cells compare in the integer domain
+    * (longs past 2^53 never collide with the fill value), a NaN fill
+    * matches NaN cells, floats compare via `toDouble`. */
+  private def nullFillRun(v: OnHeapColumnVector, r: Int, len: Int, src: AnyRef, from: Int,
+      fv: Double): Unit = {
+    val fvNaN = java.lang.Double.isNaN(fv)
+    var k = 0
+    src match {
+      case a: Array[Float] =>
+        while (k < len) {
+          val x = a(from + k)
+          if (x.toDouble == fv || (fvNaN && java.lang.Float.isNaN(x))) v.putNull(r + k)
+          k += 1
+        }
+      case a: Array[Double] =>
+        while (k < len) {
+          val x = a(from + k)
+          if (x == fv || (fvNaN && java.lang.Double.isNaN(x))) v.putNull(r + k)
+          k += 1
+        }
+      case a: Array[Long] =>
+        val fl = fv.toLong
+        if (fv == fl.toDouble)
+          while (k < len) { if (a(from + k) == fl) v.putNull(r + k); k += 1 }
+      case a: Array[Int] => while (k < len) { if (a(from + k).toDouble == fv) v.putNull(r + k); k += 1 }
+      case a: Array[Short] => while (k < len) { if (a(from + k).toDouble == fv) v.putNull(r + k); k += 1 }
+      case a: Array[Byte] => while (k < len) { if (a(from + k).toDouble == fv) v.putNull(r + k); k += 1 }
+      case a: Array[Boolean] =>
+        while (k < len) { if ((if (a(from + k)) 1.0 else 0.0) == fv) v.putNull(r + k); k += 1 }
+      case _ => // strings never match a numeric fill value
     }
   }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   override def get(): ColumnarBatch = batch
 
@@ -231,7 +286,7 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     // a partition can end (or be limit-cut) with a prefetch in flight;
     // its bytes must land in the metric before the task reports it
     varStates.foreach(_.drainPending())
-    if (batch != null) batch.close()
+    batch.close()
   }
 
   override def currentMetricsValues(): Array[CustomTaskMetric] = {
@@ -248,20 +303,4 @@ class ZarrColumnarReader(p: ZarrInputPartition, batchSize: Int = 4096)
     else base ++ Array(m(s"zarrBytesRead.m${p.memberIdx}", bytes),
       m(s"zarrChunksDecoded.m${p.memberIdx}", chunks))
   }
-
-  private def putValue(v: OnHeapColumnVector, r: Int, t: DataType, arr: AnyRef, i: Int): Unit =
-    t match {
-      case LongType | TimestampType => v.putLong(r, arr.asInstanceOf[Array[Long]](i))
-      case IntegerType => v.putInt(r, arr.asInstanceOf[Array[Int]](i))
-      case DoubleType => v.putDouble(r, arr.asInstanceOf[Array[Double]](i))
-      case FloatType => v.putFloat(r, arr.asInstanceOf[Array[Float]](i))
-      case ShortType => v.putShort(r, arr.asInstanceOf[Array[Short]](i))
-      case ByteType => v.putByte(r, arr.asInstanceOf[Array[Byte]](i))
-      case BooleanType => v.putBoolean(r, arr.asInstanceOf[Array[Boolean]](i))
-      case StringType =>
-        val b = arr.asInstanceOf[Array[String]](i)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        v.putByteArray(r, b)
-      case other => throw new IllegalStateException(s"Unsupported columnar type $other")
-    }
 }
